@@ -8,7 +8,9 @@ import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -35,17 +37,23 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - The write side (OcfWrite.scala) is the V2 commit protocol:
   *    temp-file + driver-side rename, exactly-once under task retry.
   *
-  * Scale notes: one input partition per (file, offset-range) — the
-  * same parallelism contract as a Kafka topic-partition; readers
-  * stream the container (no whole-file buffering). Record counts for
+  * Scale notes: the unit of reading is one (file, offset-range) — the
+  * same contract as a Kafka topic-partition range; readers stream the
+  * container (no whole-file buffering). A batch scan runs one task
+  * per range. A micro-batch packs its ranges, whole and in order,
+  * into about `defaultParallelism` tasks, so a trigger over many
+  * small containers costs one task per core, not one per container;
+  * only an explicit `minPartitions` splits a container (a mid-block
+  * start decodes the records before it). Record counts for
   * `latestOffset` come from the commit-time `_manifest-*.ndjson`
   * (exactly as brokers serve head offsets — zero container bytes
   * touched); unmanifested files fall back to BLOCK-header counting
   * (no record decode) memoized per (path, length, mtime), so
   * steady-state trigger cost is one listing, not O(store bytes).
   * All filesystem access flows through the session's Hadoop
-  * configuration (spark.hadoop.*, credentials), shipped to executors
-  * via SerializableConfiguration.
+  * configuration (spark.hadoop.*, credentials), broadcast to
+  * executors once per scan, stream or write (`OcfSharedConf`), so no
+  * task decodes a `Configuration` of its own.
   */
 class GraftOcfSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-ocf"
@@ -219,6 +227,9 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+  // a batch scan has no end-of-life hook: like Spark's FileScan, its
+  // broadcast is released by the ContextCleaner with the scan
+  private val sharedConf = new OcfSharedConf(conf)
   override def readSchema(): StructType = required
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -333,7 +344,9 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
     * scan reported KeyGroupedPartitioning (the partition count is a
     * contract the runtime prune must not break) and when a limit was
     * pushed (the cap was computed over the unfiltered file order and
-    * a post-cap prune could starve the limit).
+    * a post-cap prune could starve the limit). Only columns the scan
+    * still outputs are offered: Spark resolves each filter attribute
+    * against the pruned scan's output and fails on a pruned one.
     */
   private var runtimeFilters: Array[Filter] = Array.empty
 
@@ -341,6 +354,7 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     if (keyed || limit.isDefined) Array.empty
     else Array("partition", "offset", "timestamp")
+      .filter(required.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(fs: Array[Filter]): Unit =
@@ -351,14 +365,10 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
       "graft-ocf: startingOffsets=latest is not valid for batch reads " +
         "(a batch over 'from the head' is empty by definition) — the " +
         "Kafka connector rejects it the same way")
-    /** Kafka's `minPartitions` knob: a store compacted into few large
-      * containers would otherwise cap scan parallelism at the file
-      * count (one mega-container = ONE task — the inverse of the
-      * small-files problem). When the planned partition count falls
-      * short, file ranges split into ~total/minPartitions row chunks;
-      * the reader block-skips to mid-file starts, so a split costs
-      * header walking, not decode. Keyed scans are exempt: their
-      * partition layout IS the KeyGroupedPartitioning contract.
+    /** One task per file range, split further only under
+      * `minPartitions` (`OcfPlanner.split`). Keyed scans are exempt:
+      * their partition layout IS the KeyGroupedPartitioning contract,
+      * and per-file pruning reports one range per kept file.
       */
     override def planInputPartitions(): Array[InputPartition] = {
       // starting/endingTimestamp on a BATCH read seek exactly like
@@ -398,25 +408,13 @@ class OcfScan(dirs: Seq[String], maxPerTrigger: Option[Long],
           OcfKeyedRange(path, start, f.count, soleKey(f).get)
             : InputPartition
         }.toArray
-      else {
-        val target = minPartitions.getOrElse(0)
-        val total = kept.map { case (_, _, f, st) => f.count - st }.sum
-        if (target <= kept.size || total <= kept.size)
-          kept.map { case (_, path, f, start) =>
-            OcfRange(path, start, f.count): InputPartition
-          }.toArray
-        else {
-          val chunk = math.max(1L, (total + target - 1) / target)
-          kept.flatMap { case (_, path, f, start) =>
-            (start until f.count by chunk).map(st =>
-              OcfRange(path, st, math.min(st + chunk, f.count))
-                : InputPartition)
-          }.toArray
-        }
-      }
+      else
+        OcfPlanner.split(kept.map { case (_, path, f, start) =>
+          OcfRange(path, start, f.count)
+        }, minPartitions).toArray[InputPartition]
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      OcfReaderFactory(conf, required)
+      OcfReaderFactory(sharedConf.get, required)
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -676,6 +674,10 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
     * checkpointed key whose container has since been retired by
     * retention emits nothing — Kafka's truncated-log semantics, same
     * as the live-listing path.
+    *
+    * The ranges are then packed into about one task per core
+    * (`OcfPlanner.pack`); an explicit `minPartitions` instead keeps
+    * the batch scan's split rule.
     */
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
@@ -689,32 +691,94 @@ class OcfMicroBatchStream(dirs: Seq[String], maxPerTrigger: Option[Long],
           case Some((_, path, f)) =>
             val mayMatch = filters.isEmpty ||
               f.stats.forall(st => OcfFilters.mayMatch(st, filters))
-            if (e > from && mayMatch) Some((path, from, e))
+            if (e > from && mayMatch) Some(OcfRange(path, from, e))
             else None
           case None => None // retired container: truncated-log replay
         }
       }
-    // the batch scan's minPartitions discipline, per microbatch: a
-    // trigger draining one mega-container must not run as one task
+    if (minPartitions.isDefined)
+      OcfPlanner.split(ranges, minPartitions).toArray[InputPartition]
+    else
+      OcfPlanner.pack(ranges,
+        SparkSession.active.sparkContext.defaultParallelism).toArray
+  }
+
+  private val sharedConf = new OcfSharedConf(conf)
+  override def createReaderFactory(): PartitionReaderFactory =
+    OcfReaderFactory(sharedConf.get, required)
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = sharedConf.destroy()
+}
+
+/** The session's Hadoop conf shipped to executors ONCE, as a broadcast
+  * — the pattern of Spark's own FileScan. A factory that carried the
+  * conf itself would travel inside every task binary, and every task
+  * would decode the whole `Configuration` again; the broadcast handle
+  * is a few bytes and each executor decodes the value once. Made on
+  * first use (driver side); `destroy()` releases it, and a later
+  * `get` makes a fresh one.
+  */
+private[sources] final class OcfSharedConf(conf: SerializableConfiguration) {
+  private var bc: Broadcast[SerializableConfiguration] = _
+  def get: Broadcast[SerializableConfiguration] = synchronized {
+    if (bc == null) bc = SparkSession.active.sparkContext.broadcast(conf)
+    bc
+  }
+  def destroy(): Unit = synchronized {
+    if (bc != null) { bc.destroy(); bc = null }
+  }
+}
+
+/** Read-task planning shared by the batch scan and the micro-batch
+  * stream.
+  */
+private[sources] object OcfPlanner {
+  /** Kafka's `minPartitions` knob: a store compacted into few large
+    * containers would otherwise cap scan parallelism at the file count
+    * (one mega-container = ONE task — the inverse of the small-files
+    * problem). When the range count falls short of `minPartitions`,
+    * ranges split into ~total/minPartitions row chunks; the reader
+    * block-skips to mid-file starts, so a split costs header walking
+    * plus the decode of the in-block records before each start.
+    */
+  def split(ranges: Seq[OcfRange],
+            minPartitions: Option[Int]): Seq[OcfRange] = {
     val target = minPartitions.getOrElse(0)
-    val total = ranges.map { case (_, f, e) => e - f }.sum
-    if (target <= ranges.size || total <= ranges.size)
-      ranges.map { case (path, f, e) =>
-        OcfRange(path, f, e): InputPartition
-      }.toArray
+    val total = ranges.map(r => r.end - r.start).sum
+    if (target <= ranges.size || total <= ranges.size) ranges
     else {
       val chunk = math.max(1L, (total + target - 1) / target)
-      ranges.flatMap { case (path, f, e) =>
-        (f until e by chunk).map(st =>
-          OcfRange(path, st, math.min(st + chunk, e)): InputPartition)
-      }.toArray
+      ranges.flatMap(r => (r.start until r.end by chunk).map(st =>
+        OcfRange(r.file, st, math.min(st + chunk, r.end))))
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    OcfReaderFactory(conf, required)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  /** At most `tasks` read tasks: whole ranges, in order, each group
+    * closed once it holds its ~total/tasks share of records. A closed
+    * group holds at least a share, so closed groups number at most
+    * `tasks`, and a trailing partial group only exists when they fall
+    * short. Containers are never split (a mid-block start decodes the
+    * records before it); with no more ranges than tasks each range
+    * keeps its own task.
+    */
+  def pack(ranges: Seq[OcfRange], tasks: Int): Seq[InputPartition] =
+    if (ranges.size <= tasks) ranges
+    else {
+      val share = (ranges.map(r => r.end - r.start).sum + tasks - 1) / tasks
+      val groups = Seq.newBuilder[InputPartition]
+      var group = Vector.empty[OcfRange]
+      var rows = 0L
+      def close(): Unit = {
+        groups += (if (group.size == 1) group.head else OcfRangeGroup(group))
+        group = Vector.empty; rows = 0L
+      }
+      ranges.foreach { r =>
+        group :+= r; rows += r.end - r.start
+        if (rows >= share) close()
+      }
+      if (group.nonEmpty) close()
+      groups.result()
+    }
 }
 
 /** One (file, [start, end)) slice — the same unit of parallelism as a
@@ -725,6 +789,11 @@ sealed trait OcfSlice extends InputPartition {
 }
 
 case class OcfRange(file: String, start: Long, end: Long) extends OcfSlice
+
+/** Whole ranges read one after another by ONE task — a micro-batch's
+  * small containers packed into about one task per core.
+  */
+case class OcfRangeGroup(ranges: Seq[OcfRange]) extends InputPartition
 
 /** A slice whose container provably holds a single Kafka partition —
   * carries it as the storage partition key for shuffle-free grouping.
@@ -1046,87 +1115,142 @@ object OcfScanMetrics {
   def supported: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new OcfContainersOpenedMetric, new OcfRecordsSkippedMetric,
       new OcfRecordsDecodedMetric)
+
+  private val names = supported.map(_.name())
+
+  /** Task values from (containers opened, skipped, decoded) counts. */
+  private[sources] def task(counts: Array[Long])
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    names.zip(counts).map { case (n, v) => OcfTaskMetric(n, v) }
 }
 
-case class OcfReaderFactory(conf: SerializableConfiguration,
+/** Executor-side reader factory. It carries the Hadoop conf as a
+  * broadcast handle, so a task binary stays a few KB however large
+  * the conf is (see `OcfSharedConf`).
+  */
+case class OcfReaderFactory(conf: Broadcast[SerializableConfiguration],
                             required: StructType = OcfFormat.sparkSchema)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val r = p.asInstanceOf[OcfSlice]
-    new PartitionReader[InternalRow] {
-      private val path = new Path(r.file)
-      // a PRUNED reader schema: Avro schema resolution skips writer
-      // fields absent from it during decode — unused key/value byte
-      // blobs are seeked over, never allocated
-      private val dataSchema = OcfFormat.dataFields(required)
-      private val stream = new DataFileStream[GenericRecord](
-        path.getFileSystem(conf.value).open(path),
-        new GenericDatumReader[GenericRecord](null: org.apache.avro.Schema,
-          OcfFormat.prunedAvroSchema(dataSchema)))
-      private val toRow = OcfFormat.rowExtractor(dataSchema)
-      // metadata-column plan: -1 = _container, -2 = _pos, else the
-      // ordinal into the data row; resolved once per reader
-      private val metaPlan: Array[Int] = {
-        var di = -1
-        required.fields.map(_.name match {
-          case OcfFormat.ContainerCol => -1
-          case OcfFormat.PosCol => -2
-          case _ => di += 1; di
-        })
-      }
-      private val hasMeta = metaPlan.exists(_ < 0)
-      private val containerName =
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(path.getName)
-      private var skipped = 0L
-      private var decoded = 0L
-      // skip to the range start by BLOCK headers (no record decode)
-      // first, then decode only the in-block remainder — repeated
-      // admission-controlled slices of one large file stay O(blocks),
-      // not O(records x slices)
-      private var idx = 0L
-      while (idx < r.start && stream.hasNext &&
-        idx + stream.getBlockCount <= r.start) {
-        idx += stream.getBlockCount
-        skipped += stream.getBlockCount
-        stream.nextBlock()
-      }
-      // in-block positioning decodes records it will not emit — that
-      // is real decode work, so it counts in recordsDecoded (skipped
-      // counts only the header-walk jumps that decode nothing)
-      while (idx < r.start && stream.hasNext) {
-        stream.next(); idx += 1; decoded += 1
-      }
-      private var current: GenericRecord = _
-
-      override def next(): Boolean =
-        if (idx < r.end && stream.hasNext) {
-          current = stream.next(); idx += 1; decoded += 1; true
-        } else false
-      override def get(): InternalRow =
-        if (!hasMeta) toRow(current)
-        else {
-          val dr = toRow(current)
-          val vals = new Array[Any](required.length)
-          var i = 0
-          while (i < metaPlan.length) {
-            vals(i) = metaPlan(i) match {
-              case -1 => containerName
-              case -2 => idx - 1 // idx already advanced past current
-              case j => dr.get(j, dataSchema(j).dataType)
-            }
-            i += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(vals)
-        }
-      override def close(): Unit = stream.close()
-      override def currentMetricsValues()
-          : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        Array(OcfTaskMetric("containersOpened", 1L),
-          OcfTaskMetric("recordsSkipped", skipped),
-          OcfTaskMetric("recordsDecoded", decoded))
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    p match {
+      case g: OcfRangeGroup =>
+        new OcfGroupReader(conf.value.value, required, g.ranges)
+      case r: OcfSlice => new OcfSliceReader(conf.value.value, required, r)
     }
+}
+
+/** Reads one slice of one container. */
+private[sources] final class OcfSliceReader(conf: Configuration,
+                                            required: StructType,
+                                            r: OcfSlice)
+    extends PartitionReader[InternalRow] {
+  private val path = new Path(r.file)
+  // a PRUNED reader schema: Avro schema resolution skips writer
+  // fields absent from it during decode — unused key/value byte
+  // blobs are seeked over, never allocated
+  private val dataSchema = OcfFormat.dataFields(required)
+  private val stream = new DataFileStream[GenericRecord](
+    path.getFileSystem(conf).open(path),
+    new GenericDatumReader[GenericRecord](null: org.apache.avro.Schema,
+      OcfFormat.prunedAvroSchema(dataSchema)))
+  private val toRow = OcfFormat.rowExtractor(dataSchema)
+  // metadata-column plan: -1 = _container, -2 = _pos, else the
+  // ordinal into the data row; resolved once per reader
+  private val metaPlan: Array[Int] = {
+    var di = -1
+    required.fields.map(_.name match {
+      case OcfFormat.ContainerCol => -1
+      case OcfFormat.PosCol => -2
+      case _ => di += 1; di
+    })
+  }
+  private val hasMeta = metaPlan.exists(_ < 0)
+  private val containerName =
+    org.apache.spark.unsafe.types.UTF8String.fromString(path.getName)
+  private var skipped = 0L
+  private var decoded = 0L
+  // skip to the range start by BLOCK headers (no record decode)
+  // first, then decode only the in-block remainder — repeated
+  // admission-controlled slices of one large file stay O(blocks),
+  // not O(records x slices)
+  private var idx = 0L
+  while (idx < r.start && stream.hasNext &&
+    idx + stream.getBlockCount <= r.start) {
+    idx += stream.getBlockCount
+    skipped += stream.getBlockCount
+    stream.nextBlock()
+  }
+  // in-block positioning decodes records it will not emit — that
+  // is real decode work, so it counts in recordsDecoded (skipped
+  // counts only the header-walk jumps that decode nothing)
+  while (idx < r.start && stream.hasNext) {
+    stream.next(); idx += 1; decoded += 1
+  }
+  private var current: GenericRecord = _
+
+  /** (containers opened, records skipped, records decoded) so far. */
+  def counts: Array[Long] = Array(1L, skipped, decoded)
+
+  override def next(): Boolean =
+    if (idx < r.end && stream.hasNext) {
+      current = stream.next(); idx += 1; decoded += 1; true
+    } else false
+  override def get(): InternalRow =
+    if (!hasMeta) toRow(current)
+    else {
+      val dr = toRow(current)
+      val vals = new Array[Any](required.length)
+      var i = 0
+      while (i < metaPlan.length) {
+        vals(i) = metaPlan(i) match {
+          case -1 => containerName
+          case -2 => idx - 1 // idx already advanced past current
+          case j => dr.get(j, dataSchema(j).dataType)
+        }
+        i += 1
+      }
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
+    }
+  override def close(): Unit = stream.close()
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    OcfScanMetrics.task(counts)
+}
+
+/** Reads a packed group's ranges one after another, opening each
+  * container only once the previous one is drained and closed; the
+  * scan metrics sum over every range opened so far.
+  */
+private[sources] final class OcfGroupReader(conf: Configuration,
+                                            required: StructType,
+                                            ranges: Seq[OcfRange])
+    extends PartitionReader[InternalRow] {
+  private val pending = ranges.iterator
+  private var current: OcfSliceReader = null
+  private val closedCounts = new Array[Long](3)
+
+  private def retire(): Unit = if (current != null) {
+    val c = current.counts
+    c.indices.foreach(i => closedCounts(i) += c(i))
+    current.close()
+    current = null
+  }
+
+  override def next(): Boolean = {
+    var more = current != null && current.next()
+    while (!more && pending.hasNext) {
+      retire()
+      current = new OcfSliceReader(conf, required, pending.next())
+      more = current.next()
+    }
+    more
+  }
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = retire()
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val open = if (current == null) new Array[Long](3) else current.counts
+    OcfScanMetrics.task(closedCounts.zip(open).map { case (a, b) => a + b })
   }
 }
 

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -149,9 +150,11 @@ class OcfBatchWrite(dir: String, truncate: Boolean, queryId: String,
                     keepRetired: Boolean = false,
                     codec: String = "null")
     extends BatchWrite {
+  // released when the job commits or aborts
+  private val sharedConf = new OcfSharedConf(conf)
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    OcfWriterFactory(dir, queryId, conf, keyBloomBits, codec)
+    OcfWriterFactory(dir, queryId, sharedConf.get, keyBloomBits, codec)
 
   // Hadoop FileSystem signals most failures by RETURNING FALSE, not
   // throwing — an unchecked rename would report job success while a
@@ -245,6 +248,7 @@ class OcfBatchWrite(dir: String, truncate: Boolean, queryId: String,
       }
     // time-travel snapshot log: the live set after THIS commit
     OcfStore.writeSnapshot(dir, conf.value)
+    sharedConf.destroy()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -255,6 +259,7 @@ class OcfBatchWrite(dir: String, truncate: Boolean, queryId: String,
         fs.delete(new Path(temp), false)
       case _ => ()
     }
+    sharedConf.destroy()
   }
 }
 
@@ -273,10 +278,13 @@ class OcfStreamingWrite(dir: String, queryId: String,
                         keyBloomBits: Int = 0,
                         codec: String = "null")
     extends StreamingWrite {
+  // one broadcast for every epoch of the query; a StreamingWrite has
+  // no end-of-life hook, so the ContextCleaner releases it
+  private val sharedConf = new OcfSharedConf(conf)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = OcfStreamingWriterFactory(dir,
-    queryId, conf, keyBloomBits, codec)
+    queryId, sharedConf.get, keyBloomBits, codec)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -362,8 +370,11 @@ class OcfStreamingWrite(dir: String, queryId: String,
   }
 }
 
+/** Writer factories carry the Hadoop conf as a broadcast handle, as
+  * the reader factory does (`OcfSharedConf`).
+  */
 case class OcfStreamingWriterFactory(dir: String, queryId: String,
-                                     conf: SerializableConfiguration,
+                                     conf: Broadcast[SerializableConfiguration],
                                      keyBloomBits: Int = 0,
                                      codec: String = "null")
     extends StreamingDataWriterFactory {
@@ -371,19 +382,19 @@ case class OcfStreamingWriterFactory(dir: String, queryId: String,
                             epochId: Long): DataWriter[InternalRow] =
     new OcfDataWriter(
       s"$dir/.part-$queryId-$partitionId-$taskId-e$epochId.ocf.tmp",
-      f"$dir/part-$queryId-$partitionId%05d-e$epochId.ocf", conf,
+      f"$dir/part-$queryId-$partitionId%05d-e$epochId.ocf", conf.value,
       keyBloomBits, codec)
 }
 
 case class OcfWriterFactory(dir: String, queryId: String,
-                            conf: SerializableConfiguration,
+                            conf: Broadcast[SerializableConfiguration],
                             keyBloomBits: Int = 0,
                             codec: String = "null")
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] = new OcfDataWriter(
     s"$dir/.part-$queryId-$partitionId-$taskId.ocf.tmp",
-    f"$dir/part-$queryId-$partitionId%05d.ocf", conf, keyBloomBits,
+    f"$dir/part-$queryId-$partitionId%05d.ocf", conf.value, keyBloomBits,
     codec)
 }
 

@@ -157,7 +157,8 @@ class OcfTimeTravelSpec extends SparkSuite {
     }
     def epoch(sw: OcfStreamingWrite, id: Long, from: Int,
               until: Int): Unit = {
-      val w = OcfStreamingWriterFactory(dir, "qtt", conf)
+      val w = OcfStreamingWriterFactory(dir, "qtt",
+          spark.sparkContext.broadcast(conf))
         .createWriter(0, 0L, id)
       rows(from, until).foreach(w.write)
       val msg = w.commit(); w.close()
